@@ -7231,8 +7231,9 @@ object PipelineOps {
     * append-only `catalog_log` of (version, table, metadata root,
     * snapshot id) rows, where a table's CURRENT state is its
     * highest-version row and every commit is one appended row guarded by
-    * compare-and-swap ([[catalogCommit]] — a writer that lost a race
-    * must re-resolve, never blind-append). Two versions of `ship_fact`:
+    * compare-and-swap ([[graft.sources.lake.LakeCatalogLog.commit]] — a
+    * writer that lost a race must re-resolve, never blind-append). Two
+    * versions of `ship_fact`:
     * v0 pins the mutation chain's tip (the wave-2 state), v1 is the
     * ROLLBACK commit repointing at the wave-1 snapshot — a catalog swap
     * is how a rollback actually reaches readers. Readers resolve by
@@ -7252,76 +7253,6 @@ object PipelineOps {
         .parquet(root.resolve("catalog_log").toString)
       root.toString
     })
-
-  /** Per-log monitor serializing the read-validate-append sequence of
-    * [[catalogCommit]]/[[catalogCommitAll]] within this JVM — without it
-    * two same-process writers can both pass the CAS check and append
-    * duplicate versions. Across processes a real catalog gets this from
-    * the store (conditional PUT / rename-if-absent); the monitor is the
-    * single-JVM stand-in for that primitive, same as the rest of the
-    * fixture layer.
-    */
-  private val catalogLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Append one catalog commit under COMPARE-AND-SWAP: the commit names
-    * the version it expects to be current; a stale expectation (another
-    * writer won the race) REFUSES so the loser re-resolves and retries —
-    * the atomic-swap contract every catalog implements. Returns the new
-    * version. Metadata-scale: reads |log| rows, appends one.
-    */
-  private[graft] def catalogCommit(
-      s: SparkSession, logDir: String, table: String,
-      expectedVersion: Long, metaRoot: String, snapId: Long): Long =
-    catalogLocks.computeIfAbsent(logDir, _ => new Object).synchronized {
-      import s.implicits._
-      val cur = graft.Tables.readCached(s, logDir)
-        .filter($"table_name" === table)
-        .agg(max($"version")).as[Option[Long]].head()
-        .getOrElse(-1L)
-      require(cur == expectedVersion,
-        s"catalog CAS failed for $table: expected v$expectedVersion, " +
-          s"current is v$cur — re-resolve and retry")
-      val v = cur + 1L
-      Seq((v, table, metaRoot, snapId))
-        .toDF("version", "table_name", "meta_root", "snap_id")
-        .coalesce(1).write.mode("append").parquet(logDir)
-      v
-    }
-
-  /** MULTI-TABLE ATOMIC COMMIT — the cross-table transaction a derived-
-    * table refresh needs (fact + its rollup must move together):
-    * validate EVERY table's CAS expectation first, then append all rows
-    * as ONE parquet file (coalesce(1)), so log readers observe every
-    * table's new version or none. Any stale expectation refuses the
-    * whole transaction before a byte is written — CatalogSpec pins
-    * both-or-neither.
-    */
-  private[graft] def catalogCommitAll(
-      s: SparkSession, logDir: String,
-      commits: Seq[(String, Long, String, Long)]): Seq[Long] =
-    catalogLocks.computeIfAbsent(logDir, _ => new Object).synchronized {
-      import s.implicits._
-      // a table may move only ONCE per transaction — duplicate names
-      // would append two rows at the same new version
-      val dup = commits.groupBy(_._1).collect { case (t, cs) if cs.size > 1 => t }
-      require(dup.isEmpty,
-        s"duplicate tables in one transaction: ${dup.mkString(", ")}")
-      val cur = graft.Tables.readCached(s, logDir)
-        .groupBy($"table_name").agg(max($"version").as("v"))
-        .as[(String, Long)].collect().toMap
-      commits.foreach { case (t, exp, _, _) =>
-        val c = cur.getOrElse(t, -1L)
-        require(c == exp,
-          s"catalog CAS failed for $t: expected v$exp, current is v$c " +
-            "— re-resolve and retry (no table committed)")
-      }
-      val rows = commits.map { case (t, exp, root, snap) =>
-        (exp + 1L, t, root, snap) }
-      rows.toDF("version", "table_name", "meta_root", "snap_id")
-        .coalesce(1).write.mode("append").parquet(logDir)
-      rows.map(_._1)
-    }
 
   /** Months per manifest group in the two-level layout: ~1 group per
     * year of this table. The grouping key, not a tuning constant — at

@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.schema.MessageType
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -45,8 +44,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - `indexCol`   — bloom-sidecar key column (default l_orderkey)
   *
   * Scale shape: ALL resolution is metadata-scale driver work (manifest
-  * rows, DV rows per touched file, eq keys — never data rows); the data
-  * path is one InputPartition per pruned file, served COLUMNAR through
+  * rows, DV rows per touched file, eq keys — never data rows), read
+  * directly on the driver through [[LakeMeta]] with no Spark job; only
+  * DATA files go through Spark, and so does the bloom-sidecar probe of a
+  * key-filtered scan, since a sidecar grows with the rows it indexes
+  * ([[LakeResolver.bloomPrune]]). The data path is one
+  * InputPartition per pruned file, served COLUMNAR through
   * Spark's vectorized parquet reader ([[LakeColumnarPartitionReader]])
   * with row-level deletes applied as per-batch survival maps and the
   * column-ID rename/widen/default logic riding the requested schema.
@@ -56,12 +59,11 @@ class GraftLakeSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-lake"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    LakeResolver.resolve(SparkSession.active, options.asScala.toMap).schema
+    LakeResolver.resolve(options.asScala.toMap).schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table =
-    new GraftLakeTable(LakeResolver.resolve(
-      SparkSession.active, properties.asScala.toMap))
+    new GraftLakeTable(LakeResolver.resolve(properties.asScala.toMap))
 
   override def supportsExternalMetadata(): Boolean = false
 }
@@ -89,7 +91,18 @@ private[lake] case class ResolvedLakeTable(
     eqKeys: Array[Long],
     eqSeqs: Array[Long],
     idxPath: Option[String],
-    indexCol: String) extends Serializable
+    indexCol: String,
+    entries: IndexedSeq[LakeEntry]) extends Serializable {
+  /** The sequence number a commit on top of this snapshot writes at. */
+  def nextSeq: Long = entries.map(_.seq).maxOption.getOrElse(0L) + 1L
+}
+
+/** One manifest entry of a snapshot: a data or delete file (`content` is
+  * data / dv / pos_del / eq_del), its partition-discovery base, commit
+  * sequence, and the equality-delete key column ("" otherwise).
+  */
+private[lake] case class LakeEntry(
+    content: String, file: String, base: String, seq: Long, keyCol: String)
 
 private[lake] object LakeResolver {
   import graft.operators.PipelineOps.{matchedFilesOnly, normPath}
@@ -112,38 +125,33 @@ private[lake] object LakeResolver {
     !has("catalog") || has("asOfVersion")
   }
 
-  def resolve(s: SparkSession, options: Map[String, String]): ResolvedLakeTable =
-    if (cacheable(options)) cache.computeIfAbsent(options, _ => doResolve(s, options))
-    else doResolve(s, options)
+  def resolve(options: Map[String, String]): ResolvedLakeTable =
+    if (cacheable(options)) cache.computeIfAbsent(options, _ => doResolve(options))
+    else doResolve(options)
 
-  private def doResolve(
-      s: SparkSession, opts: Map[String, String]): ResolvedLakeTable = {
-    import s.implicits._
+  private def doResolve(opts: Map[String, String]): ResolvedLakeTable = {
     def opt(k: String): Option[String] =
       opts.collectFirst { case (key, v) if key.equalsIgnoreCase(k) => v }
     val indexCol = opt("indexCol").getOrElse("l_orderkey")
 
-    if (opt("schemaRoot").nonEmpty) return resolveSchemaWorld(s, opts)
+    if (opt("schemaRoot").nonEmpty) return resolveSchemaWorld(opts)
 
     // 1. catalog pointer → (metaRoot, snapshot): highest version ≤ asOf
     val (metaRoot, catalogSnap) = opt("catalog") match {
       case Some(cat) =>
         val table = opt("table").getOrElse(
           sys.error("graft-lake: option 'table' required with 'catalog'"))
-        val rows = s.read.parquet(s"$cat/catalog_log")
-          .filter($"table_name" === table)
-          .select($"version", $"meta_root", $"snap_id")
-          .as[(Long, String, Long)].collect()
+        val rows = LakeCatalogLog.rows(s"$cat/catalog_log").filter(_.table == table)
         require(rows.nonEmpty, s"graft-lake: unknown table $table in $cat")
-        val asOf = opt("asOfVersion").map(_.toLong).getOrElse(rows.map(_._1).max)
-        val hit = rows.filter(_._1 <= asOf)
+        val asOf = opt("asOfVersion").map(_.toLong).getOrElse(rows.map(_.version).max)
+        val hit = rows.filter(_.version <= asOf)
         require(hit.nonEmpty,
-          s"graft-lake: $table has no version ≤ $asOf (have ${rows.map(_._1).sorted.mkString(",")})")
-        val r = hit.maxBy(_._1)
-        require(r._2.nonEmpty,
-          s"graft-lake: $table is dropped at version ${r._1} " +
+          s"graft-lake: $table has no version ≤ $asOf (have ${rows.map(_.version).sorted.mkString(",")})")
+        val r = hit.maxBy(_.version)
+        require(r.metaRoot.nonEmpty,
+          s"graft-lake: $table is dropped at version ${r.version} " +
             "(empty meta_root tombstone) — time-travel below it to read history")
-        (r._2, Some(r._3))
+        (r.metaRoot, Some(r.snapId))
       case None =>
         (opt("metaRoot").getOrElse(sys.error(
           "graft-lake: one of 'metaRoot' or 'catalog' is required")), None)
@@ -151,32 +159,26 @@ private[lake] object LakeResolver {
 
     // 2. ref → snapshot (latest refs_log step per ref), else option, else
     //    catalog pin, else the lineage tip
-    val snaps = s.read.parquet(s"$metaRoot/snapshots")
+    val snaps = LakeMeta.read(s"$metaRoot/snapshots")
     val snapId = opt("ref") match {
       case Some(ref) =>
-        val heads = s.read.parquet(s"$metaRoot/refs_log")
-          .filter($"ref" === ref).select($"step", $"snap_id")
-          .as[(Long, Long)].collect()
+        val heads = LakeMeta.read(s"$metaRoot/refs_log").filter(_.str("ref") == ref)
         require(heads.nonEmpty, s"graft-lake: unknown ref $ref in $metaRoot")
-        heads.maxBy(_._1)._2
+        heads.maxBy(_.long("step")).long("snap_id")
       case None => opt("snapshot").map(_.toLong)
         .orElse(catalogSnap)
-        .getOrElse(snaps.agg(org.apache.spark.sql.functions.max($"snap_id"))
-          .as[Long].head())
+        .getOrElse(snaps.map(_.long("snap_id")).max)
     }
 
     // 3. manifests of that snapshot, normalized across the metadata
     //    layouts (content defaults to data, seq to 0, per-root base
     //    resolution) and unioned across the commit chain's parent roots
     //    — the snapshot's rows live in exactly one chain root
-    val entries = LakeFilters.normalizedManifests(s, metaRoot)
-      .filter($"snap_id" === snapId)
-      .select($"content", $"file", $"base", $"seq", $"key_col")
-      .as[(String, String, String, Long, String)].collect()
-      .map { case (c, f, b, q, k) =>
-        require(b.nonEmpty,
-          s"graft-lake: snapshot $snapId has no base for $f")
-        (c, normPath(f), normPath(b), q, k)
+    val entries = LakeFilters.normalizedManifests(metaRoot)
+      .collect { case (id, e) if id == snapId =>
+        require(e.base.nonEmpty,
+          s"graft-lake: snapshot $snapId has no base for ${e.file}")
+        e
       }
     // entries MAY be empty: a table bootstrapped by CREATE TABLE has a
     // zero-row manifest at snapshot 0 (the require after `declared`
@@ -184,89 +186,69 @@ private[lake] object LakeResolver {
 
     // 4. delete-file contents — metadata-scale reads (one DV row per
     //    touched file; |keys| eq rows; |deleted rows| positions)
-    val dvByFile: Map[String, Array[Long]] = {
-      val fs = entries.filter(_._1 == "dv").map(_._2)
-      if (fs.isEmpty) Map.empty
-      else s.read.parquet(fs.toIndexedSeq: _*)
-        .select($"file", $"bits").as[(String, Seq[Long])].collect()
-        .map { case (f, w) => normPath(f) -> w.toArray }.toMap
-    }
-    val posByFile: Map[String, Array[Long]] = {
-      val fs = entries.filter(_._1 == "pos_del").map(_._2)
-      if (fs.isEmpty) Map.empty
-      else s.read.parquet(fs.toIndexedSeq: _*)
-        .select($"file", $"pos").as[(String, Long)].collect()
-        .groupBy(t => normPath(t._1))
-        .map { case (f, ps) => f -> ps.map(_._2).sorted }
-    }
-    val eqEntries = entries.filter(_._1 == "eq_del")
-    val eqKeyCol = eqEntries.map(_._5).distinct.filter(_.nonEmpty) match {
-      case Array() => ""
-      case Array(k) => k
+    def deleteRows(content: String) =
+      LakeMeta.readFiles(entries.filter(_.content == content).map(_.file))
+    val dvByFile: Map[String, Array[Long]] = deleteRows("dv")
+      .map(r => normPath(r.str("file")) -> r.longs("bits")).toMap
+    val posByFile: Map[String, Array[Long]] = deleteRows("pos_del")
+      .groupBy(r => normPath(r.str("file")))
+      .map { case (f, ps) => f -> ps.map(_.long("pos")).sorted.toArray }
+    val eqEntries = entries.filter(_.content == "eq_del")
+    val eqKeyCol = eqEntries.map(_.keyCol).distinct.filter(_.nonEmpty) match {
+      case Seq() => ""
+      case Seq(k) => k
       case ks => sys.error(
         s"graft-lake: mixed equality-delete key columns ${ks.mkString(",")}")
     }
-    val (eqKeys, eqSeqs) =
-      if (eqEntries.isEmpty) (Array.empty[Long], Array.empty[Long])
-      else {
-        // keep the MAX delete sequence per key: under the strictly-older
-        // rule the max is the only one that can matter per data file
-        val m = eqEntries.groupBy(_._4).toSeq.flatMap { case (seq, es) =>
-          s.read.parquet(es.map(_._2).toIndexedSeq: _*)
-            .select($"k").as[Long].collect().map(_ -> seq)
-        }.groupBy(_._1).map { case (k, ss) => k -> ss.map(_._2).max }
-        (m.keys.toArray, m.keys.toArray.map(m))
-      }
+    // keep the MAX delete sequence per key: under the strictly-older rule
+    // the max is the only one that can matter per data file
+    val eqMax = eqEntries.groupBy(_.seq).toSeq.flatMap { case (seq, es) =>
+      LakeMeta.readFiles(es.map(_.file)).map(_.long("k") -> seq)
+    }.groupBy(_._1).map { case (k, ss) => k -> ss.map(_._2).max }
+    val eqKeys = eqMax.keys.toArray
 
     // 5. data files + their partition tuples and delete state
-    val dataEntries = entries.filter(_._1 == "data")
+    val dataEntries = entries.filter(_.content == "data")
     // worlds bootstrapped through CREATE TABLE / CTAS carry a
     // `tableschema` table (name, dtype DDL, is_part, ord) — the schema
     // source that lets an EMPTY table resolve (no file footer to read)
     // and keeps column ORDER stable across commits
-    val declared: Option[(StructType, Seq[String])] = {
-      val tsDir = s"$metaRoot/tableschema"
-      if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(tsDir))) None
-      else {
-        val rows = s.read.parquet(tsDir)
-          .select($"name", $"dtype", $"is_part", $"ord")
-          .as[(String, String, Boolean, Long)].collect().sortBy(_._4)
-        Some((StructType(rows.map(r =>
+    val declared: Option[(StructType, Seq[String])] =
+      LakeFilters.declaredSchema(metaRoot).map { rows =>
+        (StructType(rows.map(r =>
             StructField(r._1, DataType.fromDDL(r._2), nullable = true))),
-          rows.filter(_._3).map(_._1).toSeq))
+          rows.filter(_._3).map(_._1))
       }
-    }
     require(dataEntries.nonEmpty || declared.nonEmpty,
       s"graft-lake: snapshot $snapId has no data files and no tableschema " +
         s"in $metaRoot")
     val partCols = declared.map(_._2)
-      .getOrElse(partColsOf(dataEntries.head._3, dataEntries.head._2))
-    val files = dataEntries.map { case (_, f, base, seq, _) =>
-      LakeFileSpec(f, seq, partValuesOf(base, f),
-        Map.empty, dvByFile.getOrElse(f, null),
-        posByFile.getOrElse(f, null))
+      .getOrElse(partColsOf(dataEntries.head.base, dataEntries.head.file))
+    val files = dataEntries.map { e =>
+      LakeFileSpec(e.file, e.seq, partValuesOf(e.base, e.file),
+        Map.empty, dvByFile.getOrElse(e.file, null),
+        posByFile.getOrElse(e.file, null))
     }
 
     // 6. read schema: the declared tableschema when present, else first
     //    file's footer (driver-side, one file) plus the path-derived
     //    partition columns
     val schema = declared.map(_._1).getOrElse {
-      val dataSchema = s.read.parquet(dataEntries.head._2).schema
+      val dataSchema = LakeMeta.sparkSchema(dataEntries.head.file)
       StructType(dataSchema.fields ++
         partCols.map(p => StructField(p, StringType, nullable = true)))
     }
 
     // 7. per-snapshot bloom sidecar (snapshots.idx column, or idx<id>/)
     val idxPath =
-      (if (snaps.columns.contains("idx"))
-        snaps.filter($"snap_id" === snapId).select($"idx").as[String]
-          .collect().headOption.filter(_.nonEmpty)
-      else None)
+      snaps.find(r => r.has("idx") && r.long("snap_id") == snapId)
+        .map(_.str("idx")).filter(p => p != null && p.nonEmpty)
         .orElse(Some(s"$metaRoot/idx$snapId")
           .filter(p => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p))))
 
     ResolvedLakeTable(s"lake@$snapId", schema, partCols, Map.empty,
-      files.toIndexedSeq, eqKeyCol, eqKeys, eqSeqs, idxPath, indexCol)
+      files.toIndexedSeq, eqKeyCol, eqKeys, eqKeys.map(eqMax), idxPath,
+      indexCol, entries)
   }
 
   /** The column-ID world ([[graft.operators.PipelineOps#schemaIdDir]]'s
@@ -276,26 +258,23 @@ private[lake] object LakeResolver {
     * never requested, absent fields serve the field's initial default or
     * typed null. Old footers stay byte-identical; zero rewrite.
     */
-  private def resolveSchemaWorld(
-      s: SparkSession, opts: Map[String, String]): ResolvedLakeTable = {
-    import s.implicits._
+  private def resolveSchemaWorld(opts: Map[String, String]): ResolvedLakeTable = {
     def opt(k: String): Option[String] =
       opts.collectFirst { case (key, v) if key.equalsIgnoreCase(k) => v }
     val root = opt("schemaRoot").get
-    // explicit projection: the promotion fixture's schemas table carries a
-    // write-default column too, which is a WRITE-path concern — the
-    // read-side mapping needs only the initial default
-    val schemas = s.read.parquet(s"$root/schemas")
-      .select($"version", $"field_id", $"name", $"dtype", $"dflt")
-      .as[(Long, Long, String, String, Option[String])].collect()
+    // the promotion fixture's schemas table carries a write-default
+    // column too, which is a WRITE-path concern — the read-side mapping
+    // needs only the initial default
+    val schemas = LakeMeta.read(s"$root/schemas").map(r => (r.long("version"),
+      r.long("field_id"), r.str("name"), r.str("dtype"), Option(r.str("dflt"))))
     val curVer = opt("schemaVersion").map(_.toLong)
       .getOrElse(schemas.map(_._1).max)
     val current = schemas.filter(_._1 == curVer).sortBy(_._2)
     require(current.nonEmpty, s"graft-lake: unknown schema version $curVer")
-    val verOfRelease = s.read.parquet(s"$root/releases")
-      .as[(String, Long)].collect().toMap
+    val verOfRelease = LakeMeta.read(s"$root/releases")
+      .map(r => r.str("release") -> r.long("version")).toMap
     val base = normPath(s"$root/data")
-    val files = s.read.parquet(base).inputFiles.map(normPath).sorted.map { f =>
+    val files = LakeMeta.files(base).map { f =>
       val pv = partValuesOf(base, f)
       val rel = pv.getOrElse("release", sys.error(
         s"graft-lake: data file outside a release dir: $f"))
@@ -312,9 +291,10 @@ private[lake] object LakeResolver {
       case (_, _, name, _, Some(d)) => name -> d }.toMap
     val schema = StructType(fields ++
       Seq(StructField("release", StringType, nullable = true)))
+    // a column-ID world has no manifests: it is read-only to commits
     ResolvedLakeTable(s"lake-schema@v$curVer", schema, Seq("release"),
       defaults, files.toIndexedSeq, "", Array.empty, Array.empty, None,
-      opt("indexCol").getOrElse("l_orderkey"))
+      opt("indexCol").getOrElse("l_orderkey"), IndexedSeq.empty)
   }
 
   /** Hive-style `name=value` segments of `file` below `base`, in path
@@ -338,13 +318,15 @@ private[lake] object LakeResolver {
       .map(_.split("=", 2)(0)).toSeq
 
   /** Bloom-sidecar file pruning for key equality probes — the same
-    * metadata-scale planning as the library path's matchedFilesInIndex
-    * (no false negatives, so pruning is safe; the residual filter stays
-    * with Spark because false positives are possible).
+    * planning as the library path's matchedFilesInIndex (no false
+    * negatives, so pruning is safe; the residual filter stays with Spark
+    * because false positives are possible). A Spark job, unlike the
+    * rest of resolution: a sidecar's filters are sized by the rows of
+    * the file they index, so the probe runs where the data scans do.
     */
   private[lake] def bloomPrune(
       idxPath: String, keys: Seq[Long]): Set[String] = {
-    val s = SparkSession.active
+    val s = org.apache.spark.sql.SparkSession.active
     import s.implicits._
     val matched = matchedFilesOnly(s, idxPath, keys.toDF("k"))
     matched.map(normPath).toSet
@@ -444,11 +426,7 @@ private[lake] class GraftLakeTable(
       }
 
       override def build(): org.apache.spark.sql.connector.write.Write =
-        mode match {
-          case LakeWriteMode.Append =>
-            new LakeAppendWrite(resolved, c, info.schema())
-          case m => new LakeOverwriteWrite(resolved, c, info.schema(), m)
-        }
+        new LakeWrite(resolved, c, info.schema(), mode)
     }
   }
 
@@ -487,33 +465,13 @@ private[lake] class GraftLakeTable(
   override def truncateTable(): Boolean = {
     val c = ctx.getOrElse(sys.error(
       "graft-lake: TRUNCATE needs a catalog-resolved table"))
-    val s = SparkSession.active
-    import s.implicits._
-    import org.apache.spark.sql.functions.lit
     // an empty snapshot can only resolve through a DECLARED schema — a
     // footer-schema world would have no file left to infer from
-    require(java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(s"${c.metaRoot}/tableschema")),
+    require(LakeFilters.declaredSchema(c.metaRoot).nonEmpty,
       "graft-lake: TRUNCATE needs a declared-schema table (CREATE TABLE " +
         "/ CTAS worlds); use INSERT OVERWRITE or DELETE on this table")
-    val snaps = s.read.parquet(s"${c.metaRoot}/snapshots")
-    val newSnap = snaps.agg(org.apache.spark.sql.functions.max($"snap_id"))
-      .as[Long].head() + 1L
-    val root = graft.Fixtures.tempDir("graft_laketruncate")
-    Seq.empty[(Long, String, String, String, Long, String)]
-      .toDF("snap_id", "content", "file", "base", "seq", "key_col")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-    LakeFilters.writeParentMarker(root, c.metaRoot)
-    snaps.select($"snap_id", $"op", $"parent_id")
-      .unionByName(Seq((newSnap, "truncate", c.snapId))
-        .toDF("snap_id", "op", "parent_id"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
-    LakeFilters.carryTableSchema(s, c.metaRoot, root)
-    graft.operators.PipelineOps.catalogCommit(
-      s, s"${c.catalogLogDir}/catalog_log", c.table,
-      expectedVersion = c.version, metaRoot = root.toString, snapId = newSnap)
+    LakeCommit(c, graft.Fixtures.tempDir("graft_laketruncate"), Seq.empty,
+      "truncate")
     true
   }
 
@@ -545,45 +503,18 @@ private[lake] class GraftLakeTable(
     val c = ctx.getOrElse(sys.error(
       "graft-lake: DELETE needs a catalog-resolved table (use the " +
         "GraftLakeCatalog plugin, not read.format)"))
-    val s = SparkSession.active
-    import s.implicits._
     val keys = filters.toSeq
       .flatMap(f => LakeFilters.keyKeys(f, resolved.indexCol)).flatten.distinct
     require(keys.nonEmpty, "graft-lake: DELETE without key predicates")
-    val man = LakeFilters.normalizedManifests(s, c.metaRoot)
-    val tip = man.filter($"snap_id" === c.snapId)
-    val newSeq = tip.agg(org.apache.spark.sql.functions.max($"seq"))
-      .as[Option[Long]].head().getOrElse(0L) + 1L
-    // max over the WORLD's snapshots, not loaded-pin+1: a pointer-only
-    // rollback pins a snap_id below the world's max, and pin+1 would
-    // collide with an existing snapshot (duplicate id = merged manifests)
-    val snaps = s.read.parquet(s"${c.metaRoot}/snapshots")
-    val newSnap = snaps.agg(org.apache.spark.sql.functions.max($"snap_id"))
-      .as[Long].head() + 1L
+    val seq = resolved.nextSeq
     val root = graft.Fixtures.tempDir("graft_lakecommit")
-    import org.apache.spark.sql.functions.lit
-    keys.toDF("k").select($"k", lit(newSeq).as("seq_del")).coalesce(1)
-      .write.mode("overwrite").parquet(root.resolve("eq").toString)
-    val eqFiles = s.read.parquet(root.resolve("eq").toString)
-      .inputFiles.map(LakeResolver.normLocal).toSeq
-    // ONLY the new snapshot's rows — history stays in the parent chain
-    tip.withColumn("snap_id", lit(newSnap))
-      .unionByName(eqFiles.toDF("file").select(
-        lit(newSnap).as("snap_id"), lit("eq_del").as("content"), $"file",
-        lit(root.resolve("eq").toString).as("base"), lit(newSeq).as("seq"),
-        lit(resolved.indexCol).as("key_col")))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-    LakeFilters.writeParentMarker(root, c.metaRoot)
-    snaps.select($"snap_id", $"op", $"parent_id")
-      .unionByName(Seq((newSnap, "eq_delete", c.snapId))
-        .toDF("snap_id", "op", "parent_id"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
-    LakeFilters.carryTableSchema(s, c.metaRoot, root)
-    graft.operators.PipelineOps.catalogCommit(
-      s, s"${c.catalogLogDir}/catalog_log", c.table,
-      expectedVersion = c.version, metaRoot = root.toString, snapId = newSnap)
+    val eqDir = root.resolve("eq")
+    val eqFile = LakeMeta.write(eqDir,
+      LakeMeta.schemaOf("k" -> LongType, "seq_del" -> LongType),
+      keys.map(k => (k, seq)))
+    LakeCommit(c, root, resolved.entries :+
+      LakeEntry("eq_del", eqFile, eqDir.toString, seq, resolved.indexCol),
+      "eq_delete")
   }
 }
 
@@ -637,13 +568,21 @@ private[lake] object LakeFilters {
     * commit's fresh metadata root, so the declared schema and column
     * order survive every commit. No-op for worlds without one.
     */
-  def carryTableSchema(
-      s: SparkSession, fromRoot: String, toRoot: java.nio.file.Path): Unit = {
-    val src = s"$fromRoot/tableschema"
-    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(src)))
-      s.read.parquet(src).coalesce(1)
-        .write.parquet(toRoot.resolve("tableschema").toString)
-  }
+  def carryTableSchema(fromRoot: String, toRoot: java.nio.file.Path): Unit =
+    if (hasTableSchema(fromRoot))
+      LakeMeta.copyTable(s"$fromRoot/tableschema", toRoot.resolve("tableschema"))
+
+  private def hasTableSchema(metaRoot: String): Boolean =
+    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(metaRoot, "tableschema"))
+
+  /** The declared (name, dtype DDL, is_part) columns in order, for worlds
+    * bootstrapped through CREATE TABLE / CTAS; None for footer-schema
+    * worlds.
+    */
+  def declaredSchema(metaRoot: String): Option[Seq[(String, String, Boolean)]] =
+    if (!hasTableSchema(metaRoot)) None
+    else Some(LakeMeta.read(s"$metaRoot/tableschema").sortBy(_.long("ord"))
+      .map(r => (r.str("name"), r.str("dtype"), r.bool("is_part"))))
 
   /** The metadata-root PARENT CHAIN of a world: each connector commit
     * writes ONLY its new snapshot's manifest rows plus a `parent_root`
@@ -678,145 +617,97 @@ private[lake] object LakeFilters {
     java.nio.file.Files.write(root.resolve("parent_root"),
       parent.getBytes("UTF-8"))
 
-  /** A metadata world's manifests normalized to the full-width shape
-    * (snap_id, content, file, base, seq, key_col), UNIONED across the
-    * parent-root chain — per-snapshot base resolved through each root's
-    * own snapshots table when its manifests carry none. Every snapshot's
+  /** A metadata world's manifest entries as (snap_id, entry), normalized
+    * to the full-width shape (content defaults to data, seq to 0,
+    * key_col to ""; paths local), UNIONED across the parent-root chain —
+    * per-snapshot base resolved through each root's own snapshots table
+    * when its manifests carry none (an entry whose snapshot has no row
+    * there is dropped, as the join it replaces did). Every snapshot's
     * rows live in exactly one chain root (commits write only their new
     * snapshot; fixture roots are self-contained), so the union never
     * duplicates an entry.
     */
-  def normalizedManifests(
-      s: SparkSession, metaRoot: String): org.apache.spark.sql.DataFrame =
-    manifestRoots(metaRoot).map(normalizeOne(s, _)).reduce(_ unionByName _)
+  def normalizedManifests(metaRoot: String): IndexedSeq[(Long, LakeEntry)] =
+    manifestRoots(metaRoot).flatMap(normalizeOne).toIndexedSeq
 
-  private def normalizeOne(
-      s: SparkSession, metaRoot: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val man = s.read.parquet(s"$metaRoot/manifests")
-    val mc = man.columns.map(_.toLowerCase).toSet
-    def colOr(n: String, d: org.apache.spark.sql.Column) =
-      if (mc.contains(n)) man(n) else d
-    val withBase =
-      if (mc.contains("base"))
-        man.select(man("snap_id"), colOr("content", lit("data")).as("content"),
-          man("file"), man("base"), colOr("seq", lit(0L)).cast("long").as("seq"),
-          colOr("key_col", lit("")).as("key_col"))
-      else {
-        val bases = s.read.parquet(s"$metaRoot/snapshots")
-          .select(org.apache.spark.sql.functions.col("snap_id"),
-            org.apache.spark.sql.functions.col("base"))
-        man.join(bases, Seq("snap_id"))
-          .select(man("snap_id"), colOr("content", lit("data")).as("content"),
-            man("file"), bases("base"),
-            colOr("seq", lit(0L)).cast("long").as("seq"),
-            colOr("key_col", lit("")).as("key_col"))
-      }
-    withBase
-  }
-}
-
-/** The append Write: clustered by the partition columns (so a task holds
-  * one open file per partition it owns — the write shape a real table
-  * format requests at 100 TB), executed by parquet writers on the
-  * executors, committed as one CAS metadata snapshot on the driver.
-  */
-private[lake] class LakeAppendWrite(
-    resolved: ResolvedLakeTable, ctx: LakeMutationCtx, schema: StructType)
-    extends org.apache.spark.sql.connector.write.Write
-    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-  import org.apache.spark.sql.connector.write._
-  import org.apache.spark.sql.connector.distributions.Distributions
-  import org.apache.spark.sql.connector.expressions.Expressions
-
-  override def description(): String =
-    s"graft-lake append to ${ctx.table}@v${ctx.version}"
-
-  override def requiredDistribution()
-      : org.apache.spark.sql.connector.distributions.Distribution =
-    if (resolved.partitionCols.isEmpty) Distributions.unspecified()
-    else Distributions.clustered(
-      resolved.partitionCols.map(c => Expressions.identity(c)).toArray)
-  override def requiredOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    Array.empty
-
-  override def toBatch: BatchWrite = new BatchWrite {
-    private val root = graft.Fixtures.tempDir("graft_lakeappend")
-    private val dataDir = root.resolve("data").toString
-
-    override def createBatchWriterFactory(
-        info: PhysicalWriteInfo): DataWriterFactory =
-      new LakeWriterFactory(schema, resolved.partitionCols.toArray, dataDir)
-
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val s = SparkSession.active
-      import s.implicits._
-      import org.apache.spark.sql.functions.lit
-      val files = messages.flatMap {
-        case m: LakeCommitMessage => m.files
-      }.toSeq
-      // zero files is a legal append (an empty INSERT/CTAS SELECT still
-      // commits a snapshot, like Iceberg's empty-append commits)
-      val man = LakeFilters.normalizedManifests(s, ctx.metaRoot)
-      val tip = man.filter($"snap_id" === ctx.snapId)
-      val newSeq = tip.agg(org.apache.spark.sql.functions.max($"seq"))
-        .as[Option[Long]].head().getOrElse(0L) + 1L
-      // world-max + 1, not pin + 1 — see deleteWhere
-      val snaps = s.read.parquet(s"${ctx.metaRoot}/snapshots")
-      val newSnap = snaps.agg(org.apache.spark.sql.functions.max($"snap_id"))
-        .as[Long].head() + 1L
-      // ONLY the new snapshot's rows — history stays in the parent chain
-      tip.withColumn("snap_id", lit(newSnap))
-        .unionByName(files.toDF("file").select(
-          lit(newSnap).as("snap_id"), lit("data").as("content"), $"file",
-          lit(dataDir).as("base"), lit(newSeq).as("seq"),
-          lit("").as("key_col")))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-      LakeFilters.writeParentMarker(root, ctx.metaRoot)
-      snaps.select($"snap_id", $"op", $"parent_id")
-        .unionByName(Seq((newSnap, "append", ctx.snapId))
-          .toDF("snap_id", "op", "parent_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
-      LakeFilters.carryTableSchema(s, ctx.metaRoot, root)
-      graft.operators.PipelineOps.catalogCommit(
-        s, s"${ctx.catalogLogDir}/catalog_log", ctx.table,
-        expectedVersion = ctx.version, metaRoot = root.toString,
-        snapId = newSnap)
+  private def normalizeOne(metaRoot: String): Seq[(Long, LakeEntry)] = {
+    val man = LakeMeta.read(s"$metaRoot/manifests")
+    lazy val baseOf: Map[Long, String] = LakeMeta.read(s"$metaRoot/snapshots")
+      .map(r => r.long("snap_id") -> r.str("base")).toMap
+    man.flatMap { r =>
+      val snap = r.long("snap_id")
+      val base = if (r.has("base")) Some(r.str("base")) else baseOf.get(snap)
+      base.map(b => snap -> LakeEntry(r.strOr("content", "data"),
+        LakeResolver.normLocal(r.str("file")), LakeResolver.normLocal(b),
+        if (r.has("seq")) r.long("seq") else 0L, r.strOr("key_col", "")))
     }
-
-    override def abort(messages: Array[WriterCommitMessage]): Unit =
-      graft.Fixtures.deleteRecursively(root)
   }
 }
 
-/** Which replacement semantics an `INSERT OVERWRITE` commit applies. */
+/** The one metadata commit every mutation ends with: the new snapshot
+  * (world max snap_id + 1 — not pin + 1: a pointer-only rollback pins a
+  * snap_id below the world's max, and pin+1 would collide with an
+  * existing snapshot) lists exactly `entries`, written as a fresh
+  * metadata root `root` that carries ONLY the new snapshot's manifest
+  * rows plus a `parent_root` pointer (history stays in the parent chain),
+  * the world's snapshots table extended by one `op` row, and the
+  * declared schema; then the catalog pointer CASes from the version the
+  * handle loaded, so a concurrent commit makes this one refuse like any
+  * other lost race.
+  */
+private[lake] object LakeCommit {
+  def apply(ctx: LakeMutationCtx, root: java.nio.file.Path,
+      entries: Seq[LakeEntry], op: String): Unit = {
+    val snaps = LakeMeta.read(s"${ctx.metaRoot}/snapshots")
+      .map(r => (r.long("snap_id"), r.str("op"), r.long("parent_id")))
+    val newSnap = snaps.map(_._1).max + 1L
+    LakeMeta.write(root.resolve("manifests"), LakeMeta.ManifestSchema,
+      entries.map(e => (newSnap, e.content, e.file, e.base, e.seq, e.keyCol)))
+    LakeFilters.writeParentMarker(root, ctx.metaRoot)
+    LakeMeta.write(root.resolve("snapshots"), LakeMeta.SnapshotSchema,
+      snaps :+ ((newSnap, op, ctx.snapId)))
+    LakeFilters.carryTableSchema(ctx.metaRoot, root)
+    LakeCatalogLog.commit(s"${ctx.catalogLogDir}/catalog_log", ctx.table,
+      expectedVersion = ctx.version, metaRoot = root.toString, snapId = newSnap)
+  }
+}
+
+/** Which entries of the tip a write commit replaces. */
 private[lake] sealed trait LakeWriteMode
 private[lake] object LakeWriteMode {
+  /** `INSERT INTO`: everything carries. */
   case object Append extends LakeWriteMode
+  /** Full `INSERT OVERWRITE`: nothing carries, data AND delete entries —
+    * a truncated table has nothing left for deletes to apply to.
+    */
   case object Truncate extends LakeWriteMode
+  /** Static partition overwrite: data files whose Hive partition tuple
+    * matches the PARTITION spec are dropped; everything else (including
+    * delete files — still live against the carried data, inert against
+    * the new files by the sequence rule) carries.
+    */
   case class OverwriteWhere(filters: Array[Filter]) extends LakeWriteMode
+  /** Dynamic partition overwrite: the replaced set is exactly the
+    * partition tuples the WRITTEN files landed in.
+    */
   case object DynamicOverwrite extends LakeWriteMode
+  /** Copy-on-write MERGE / UPDATE / DELETE (`op`): the data files the
+    * operation's scan planned — read at COMMIT time, after runtime group
+    * filtering shrank the set — are swapped for the rewritten ones.
+    */
+  case class Replace(planned: () => Seq[String], op: String) extends LakeWriteMode
 }
 
-/** The OVERWRITE write: same executor-side parquet writers as the
-  * append, but the commit REPLACES part or all of the tip —
-  *
-  *  - [[LakeWriteMode.Truncate]]: nothing carries (data AND delete
-  *    entries — a truncated table has nothing left for deletes to
-  *    apply to);
-  *  - [[LakeWriteMode.OverwriteWhere]]: data files whose Hive partition
-  *    tuple matches the static PARTITION spec are dropped; everything
-  *    else (including delete files — still live against the carried
-  *    data, inert against the new files by the sequence rule) carries;
-  *  - [[LakeWriteMode.DynamicOverwrite]]: the replaced set is exactly
-  *    the partition tuples the WRITTEN files landed in.
-  *
-  * One CAS snapshot either way; history stays time-travelable.
+/** Every executor-side write: clustered by the partition columns (so a
+  * task holds one open file per partition it owns — the write shape a
+  * real table format requests at 100 TB), executed by parquet writers on
+  * the executors, committed as ONE CAS metadata snapshot on the driver
+  * whose entries are the tip's carried entries (per [[LakeWriteMode]])
+  * plus the written files at the next sequence number. Zero written
+  * files is a legal commit (an empty INSERT/CTAS SELECT, or a
+  * delete-all group). Old snapshots stay time-travelable.
   */
-private[lake] class LakeOverwriteWrite(
+private[lake] class LakeWrite(
     resolved: ResolvedLakeTable, ctx: LakeMutationCtx, schema: StructType,
     mode: LakeWriteMode)
     extends org.apache.spark.sql.connector.write.Write
@@ -824,9 +715,14 @@ private[lake] class LakeOverwriteWrite(
   import org.apache.spark.sql.connector.write._
   import org.apache.spark.sql.connector.distributions.Distributions
   import org.apache.spark.sql.connector.expressions.Expressions
+  import LakeWriteMode._
 
-  override def description(): String =
-    s"graft-lake $mode on ${ctx.table}@v${ctx.version}"
+  override def description(): String = mode match {
+    case Append => s"graft-lake append to ${ctx.table}@v${ctx.version}"
+    case Replace(_, op) =>
+      s"graft-lake $op (copy-on-write) on ${ctx.table}@v${ctx.version}"
+    case m => s"graft-lake $m on ${ctx.table}@v${ctx.version}"
+  }
 
   override def requiredDistribution()
       : org.apache.spark.sql.connector.distributions.Distribution =
@@ -838,7 +734,11 @@ private[lake] class LakeOverwriteWrite(
     Array.empty
 
   override def toBatch: BatchWrite = new BatchWrite {
-    private val root = graft.Fixtures.tempDir("graft_lakeoverwrite")
+    private val root = graft.Fixtures.tempDir(mode match {
+      case Append => "graft_lakeappend"
+      case _: Replace => "graft_lakecow"
+      case _ => "graft_lakeoverwrite"
+    })
     private val dataDir = root.resolve("data").toString
 
     override def createBatchWriterFactory(
@@ -846,72 +746,39 @@ private[lake] class LakeOverwriteWrite(
       new LakeWriterFactory(schema, resolved.partitionCols.toArray, dataDir)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val s = SparkSession.active
-      import s.implicits._
-      import org.apache.spark.sql.functions.lit
       val files = messages.flatMap {
         case m: LakeCommitMessage => m.files
       }.toSeq
-      val man = LakeFilters.normalizedManifests(s, ctx.metaRoot)
-      val tip = man.filter($"snap_id" === ctx.snapId)
-      val newSeq = tip.agg(org.apache.spark.sql.functions.max($"seq"))
-        .as[Option[Long]].head().getOrElse(0L) + 1L
-      val snaps = s.read.parquet(s"${ctx.metaRoot}/snapshots")
-      val newSnap = snaps.agg(org.apache.spark.sql.functions.max($"snap_id"))
-        .as[Long].head() + 1L
-      // metadata-scale: one row per tip entry, partition tuples parsed
-      // from the paths exactly as the reader parses them
-      val tipRows = tip
-        .select($"content", $"file", $"base", $"seq", $"key_col")
-        .as[(String, String, String, Long, String)].collect()
-      val dynParts: Set[Map[String, String]] =
-        if (mode == LakeWriteMode.DynamicOverwrite)
-          files.map(f => LakeResolver.partValuesOf(dataDir, f)).toSet
-        else Set.empty
-      def replaced(file: String, base: String): Boolean = mode match {
-        case LakeWriteMode.Truncate => true
-        case LakeWriteMode.OverwriteWhere(fs) =>
-          val pv = LakeResolver.partValuesOf(base, file)
+      // partition tuples parsed from the paths exactly as the reader
+      // parses them
+      lazy val dynParts = files.map(LakeResolver.partValuesOf(dataDir, _)).toSet
+      lazy val planned = mode match {
+        case Replace(p, _) => p().toSet
+        case _ => Set.empty[String]
+      }
+      def replaced(e: LakeEntry): Boolean = mode match {
+        case Append => false
+        case Truncate => true
+        case OverwriteWhere(fs) =>
+          val pv = LakeResolver.partValuesOf(e.base, e.file)
           fs.forall(LakeFilters.evalPartitionFilter(_, pv))
-        case LakeWriteMode.DynamicOverwrite =>
-          dynParts.contains(LakeResolver.partValuesOf(base, file))
-        case LakeWriteMode.Append => false
+        case DynamicOverwrite =>
+          dynParts.contains(LakeResolver.partValuesOf(e.base, e.file))
+        case _: Replace => planned.contains(e.file)
       }
-      val carriedRows = tipRows.filter { case (c, f, b, _, _) =>
-        if (mode == LakeWriteMode.Truncate) false
-        else c != "data" || !replaced(f, b)
-      }.toSeq
-      val opName = mode match {
-        case LakeWriteMode.Truncate => "truncate_overwrite"
-        case _: LakeWriteMode.OverwriteWhere => "overwrite"
-        case LakeWriteMode.DynamicOverwrite => "dynamic_overwrite"
-        case LakeWriteMode.Append => "append"
+      val carried =
+        if (mode == Truncate) Seq.empty
+        else resolved.entries.filterNot(e => e.content == "data" && replaced(e))
+      val seq = resolved.nextSeq
+      val op = mode match {
+        case Append => "append"
+        case Truncate => "truncate_overwrite"
+        case _: OverwriteWhere => "overwrite"
+        case DynamicOverwrite => "dynamic_overwrite"
+        case Replace(_, o) => s"cow_$o"
       }
-      val carried = carriedRows
-        .toDF("content", "file", "base", "seq", "key_col")
-        .select(lit(newSnap).as("snap_id"), $"content", $"file", $"base",
-          $"seq", $"key_col")
-      val fresh =
-        if (files.isEmpty) carried.filter(lit(false))
-        else files.toDF("file").select(
-          lit(newSnap).as("snap_id"), lit("data").as("content"), $"file",
-          lit(dataDir).as("base"), lit(newSeq).as("seq"),
-          lit("").as("key_col"))
-      // ONLY the new snapshot's rows — history stays in the parent chain
-      carried.unionByName(fresh)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-      LakeFilters.writeParentMarker(root, ctx.metaRoot)
-      snaps.select($"snap_id", $"op", $"parent_id")
-        .unionByName(Seq((newSnap, opName, ctx.snapId))
-          .toDF("snap_id", "op", "parent_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
-      LakeFilters.carryTableSchema(s, ctx.metaRoot, root)
-      graft.operators.PipelineOps.catalogCommit(
-        s, s"${ctx.catalogLogDir}/catalog_log", ctx.table,
-        expectedVersion = ctx.version, metaRoot = root.toString,
-        snapId = newSnap)
+      LakeCommit(ctx, root,
+        carried ++ files.map(LakeEntry("data", _, dataDir, seq, "")), op)
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -964,91 +831,11 @@ private[lake] class LakeRowLevelOperation(
       override def build(): org.apache.spark.sql.connector.write.Write =
         // plannedFiles is read lazily at COMMIT time: runtime group
         // filtering mutates the scan's file set after build
-        new LakeReplaceWrite(resolved, ctx, info.schema(),
+        new LakeWrite(resolved, ctx, info.schema(), LakeWriteMode.Replace(
           () => opScan.map(_.plannedFiles)
             .getOrElse(resolved.files.map(_.path)),
-          cmd.toString.toLowerCase)
+          cmd.toString.toLowerCase))
     }
-}
-
-/** The copy-on-write REPLACE write: same executor-side parquet writers as
-  * the append, but the commit swaps the scanned data files out for the
-  * written ones instead of adding on top.
-  */
-private[lake] class LakeReplaceWrite(
-    resolved: ResolvedLakeTable, ctx: LakeMutationCtx, schema: StructType,
-    replacedFiles: () => Seq[String], op: String)
-    extends org.apache.spark.sql.connector.write.Write
-    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-  import org.apache.spark.sql.connector.write._
-  import org.apache.spark.sql.connector.distributions.Distributions
-  import org.apache.spark.sql.connector.expressions.Expressions
-
-  override def description(): String =
-    s"graft-lake $op (copy-on-write) on ${ctx.table}@v${ctx.version}"
-
-  override def requiredDistribution()
-      : org.apache.spark.sql.connector.distributions.Distribution =
-    if (resolved.partitionCols.isEmpty) Distributions.unspecified()
-    else Distributions.clustered(
-      resolved.partitionCols.map(c => Expressions.identity(c)).toArray)
-  override def requiredOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    Array.empty
-
-  override def toBatch: BatchWrite = new BatchWrite {
-    private val root = graft.Fixtures.tempDir("graft_lakecow")
-    private val dataDir = root.resolve("data").toString
-
-    override def createBatchWriterFactory(
-        info: PhysicalWriteInfo): DataWriterFactory =
-      new LakeWriterFactory(schema, resolved.partitionCols.toArray, dataDir)
-
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val s = SparkSession.active
-      import s.implicits._
-      import org.apache.spark.sql.functions.lit
-      val files = messages.flatMap {
-        case m: LakeCommitMessage => m.files
-      }.toSeq
-      val replaced = replacedFiles().toSet
-      val man = LakeFilters.normalizedManifests(s, ctx.metaRoot)
-      val tip = man.filter($"snap_id" === ctx.snapId)
-      val newSeq = tip.agg(org.apache.spark.sql.functions.max($"seq"))
-        .as[Option[Long]].head().getOrElse(0L) + 1L
-      // world-max + 1, not pin + 1 — see deleteWhere
-      val snaps = s.read.parquet(s"${ctx.metaRoot}/snapshots")
-      val newSnap = snaps.agg(org.apache.spark.sql.functions.max($"snap_id"))
-        .as[Long].head() + 1L
-      val carried = tip.filter(!($"content" === "data" &&
-        $"file".isin(replaced.toSeq: _*)))
-        .withColumn("snap_id", lit(newSnap))
-      val fresh =
-        if (files.isEmpty) carried.filter(lit(false)) // a delete-all group
-        else files.toDF("file").select(
-          lit(newSnap).as("snap_id"), lit("data").as("content"), $"file",
-          lit(dataDir).as("base"), lit(newSeq).as("seq"),
-          lit("").as("key_col"))
-      // ONLY the new snapshot's rows — history stays in the parent chain
-      carried.unionByName(fresh)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-      LakeFilters.writeParentMarker(root, ctx.metaRoot)
-      snaps.select($"snap_id", $"op", $"parent_id")
-        .unionByName(Seq((newSnap, s"cow_$op", ctx.snapId))
-          .toDF("snap_id", "op", "parent_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
-      LakeFilters.carryTableSchema(s, ctx.metaRoot, root)
-      graft.operators.PipelineOps.catalogCommit(
-        s, s"${ctx.catalogLogDir}/catalog_log", ctx.table,
-        expectedVersion = ctx.version, metaRoot = root.toString,
-        snapId = newSnap)
-    }
-
-    override def abort(messages: Array[WriterCommitMessage]): Unit =
-      graft.Fixtures.deleteRecursively(root)
-  }
 }
 
 private[lake] case class LakeCommitMessage(files: Seq[String])
@@ -1074,31 +861,13 @@ private[lake] class LakeDataWriter(
   import org.apache.parquet.example.data.simple.SimpleGroupFactory
   import org.apache.parquet.hadoop.example.ExampleParquetWriter
   import org.apache.parquet.io.api.Binary
-  import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
   private val dataFields = schema.fields.zipWithIndex
     .filterNot { case (f, _) => partCols.contains(f.name) }
   private val partIdx = partCols.map(c => schema.fieldIndex(c))
 
-  private val messageType: MessageType = {
-    val b = Types.buildMessage()
-    dataFields.foreach { case (f, _) =>
-      f.dataType match {
-        case LongType => b.addField(Types.optional(INT64).named(f.name))
-        case IntegerType => b.addField(Types.optional(INT32).named(f.name))
-        case StringType => b.addField(Types.optional(BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(f.name))
-        case DateType => b.addField(Types.optional(INT32)
-          .as(LogicalTypeAnnotation.dateType()).named(f.name))
-        case DoubleType => b.addField(Types.optional(DOUBLE).named(f.name))
-        case FloatType => b.addField(Types.optional(FLOAT).named(f.name))
-        case BooleanType => b.addField(Types.optional(BOOLEAN).named(f.name))
-        case t => sys.error(s"graft-lake: unsupported write type $t")
-      }
-    }
-    b.named("spark_schema")
-  }
+  private val messageType: MessageType =
+    LakeMeta.messageType(dataFields.map(_._1).toSeq)
   private val factory = new SimpleGroupFactory(messageType)
   private val writers = scala.collection.mutable.Map[
     String, (org.apache.parquet.hadoop.ParquetWriter[
@@ -1180,6 +949,14 @@ private[lake] class LakeDataWriter(
   * tableschema; pre-existing files serve NULL for the new columns).
   * RENAME and DROP/RENAME COLUMN stay out of scope — they need the
   * field-ID mapped worlds.
+  *
+  * Every pointer-log read and append, and every metadata table a
+  * statement resolves or commits (manifests, snapshots, tableschema,
+  * delete files), is driver-side parquet I/O through [[LakeMeta]] — no
+  * Spark job. A catalog statement therefore runs Spark jobs only over
+  * DATA files: CREATE / ALTER / DROP / TRUNCATE and a key-equality
+  * DELETE run none, an INSERT runs its write, a SELECT its scan
+  * (LakeSqlSpec pins the counts).
   */
 class GraftLakeCatalog
     extends org.apache.spark.sql.connector.catalog.TableCatalog {
@@ -1198,30 +975,21 @@ class GraftLakeCatalog
   }
   override def name(): String = catName
 
-  private def logRows(s: SparkSession): Seq[(Long, String, String, Long)] = {
-    import s.implicits._
-    s.read.parquet(s"$catalogRoot/catalog_log")
-      .select($"version", $"table_name", $"meta_root", $"snap_id")
-      .as[(Long, String, String, Long)].collect().toIndexedSeq
-  }
+  private def logDir = s"$catalogRoot/catalog_log"
 
-  /** Latest pointer-log row for `name`. A row with an EMPTY meta_root is
-    * a DROP tombstone: the name resolves as absent at the tip while
-    * older versions stay time-travelable.
+  /** Latest pointer-log row per name, from ONE log read. A row with an
+    * EMPTY meta_root is a DROP tombstone: the name resolves as absent at
+    * the tip while older versions stay time-travelable.
     */
-  private def latest(
-      s: SparkSession, name: String): Option[(Long, String, Long)] =
-    logRows(s).filter(_._2 == name) match {
-      case rows if rows.isEmpty => None
-      case rows => val r = rows.maxBy(_._1); Some((r._1, r._3, r._4))
-    }
+  private def tips(): Map[String, CatalogLogRow] =
+    LakeCatalogLog.tips(LakeCatalogLog.rows(logDir))
 
-  override def listTables(namespace: Array[String]): Array[Identifier] = {
-    val s = SparkSession.active
-    logRows(s).map(_._2).distinct.sorted
-      .filter(t => latest(s, t).exists(_._2.nonEmpty))
+  private def live(name: String): Option[CatalogLogRow] =
+    tips().get(name).filter(_.metaRoot.nonEmpty)
+
+  override def listTables(namespace: Array[String]): Array[Identifier] =
+    tips().values.filter(_.metaRoot.nonEmpty).map(_.table).toSeq.sorted
       .map(t => Identifier.of(Array.empty, t)).toArray
-  }
 
   override def loadTable(ident: Identifier): Table = load(ident, None)
 
@@ -1236,39 +1004,52 @@ class GraftLakeCatalog
   private val MetaTables = Set("snapshots", "manifests", "refs_log")
 
   private def load(ident: Identifier, asOf: Option[Long]): Table = {
-    val s = SparkSession.active
     if (ident.namespace().length == 1 && MetaTables.contains(ident.name)) {
       val parent = ident.namespace()(0)
-      val (_, metaRoot, _) = latest(s, parent).filter(_._2.nonEmpty)
-        .getOrElse(throw new NoSuchTableException(ident))
+      val metaRoot = live(parent).getOrElse(throw new NoSuchTableException(ident))
+        .metaRoot
       // `.manifests` spans the commit chain (each root carries only its
-      // own snapshot's rows); snapshots/refs_log are complete at the tip
-      val dirs = (if (ident.name == "manifests")
+      // own snapshot's rows); snapshots/refs_log are complete at the tip.
+      // Roots stay in chain order, tip first, so the schema comes from
+      // the tip's layout even when older roots use a legacy one.
+      val files = (if (ident.name == "manifests")
           LakeFilters.manifestRoots(metaRoot)
         else Seq(metaRoot))
-        .map(r => s"$r/${ident.name}")
-        .filter(d => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
-      if (dirs.isEmpty) throw new NoSuchTableException(ident)
-      val files = dirs.flatMap(d => s.read.parquet(d).inputFiles)
-        .map(LakeResolver.normLocal).sorted.toIndexedSeq
-      val schema = s.read.parquet(dirs.head).schema
+        .flatMap(r => LakeMeta.files(s"$r/${ident.name}")).toIndexedSeq
+      if (files.isEmpty) throw new NoSuchTableException(ident)
+      // read-only: no commit builds on a metadata table, so no entries
       return new GraftLakeTable(ResolvedLakeTable(
-        s"$parent.${ident.name}", schema, Seq.empty, Map.empty,
+        s"$parent.${ident.name}", LakeMeta.sparkSchema(files.head), Seq.empty,
+        Map.empty,
         files.map(f => LakeFileSpec(f, 0L, Map.empty, Map.empty, null, null)),
-        "", Array.empty, Array.empty, None, "l_orderkey"))
+        "", Array.empty, Array.empty, None, "l_orderkey", IndexedSeq.empty))
     }
-    val rows = logRows(s).filter(_._2 == ident.name)
+    val rows = LakeCatalogLog.rows(logDir).filter(_.table == ident.name)
     if (rows.isEmpty) throw new NoSuchTableException(ident)
-    val hit = rows.filter(r => asOf.forall(r._1 <= _))
+    val hit = rows.filter(r => asOf.forall(r.version <= _))
     require(hit.nonEmpty,
       s"${ident.name} has no version ≤ ${asOf.get} " +
-        s"(have ${rows.map(_._1).sorted.mkString(",")})")
-    val (ver, metaRoot, snap) = { val r = hit.maxBy(_._1); (r._1, r._3, r._4) }
-    if (metaRoot.isEmpty) throw new NoSuchTableException(ident) // tombstoned
-    val resolved = LakeResolver.resolve(s,
-      Map("metaRoot" -> metaRoot, "snapshot" -> snap.toString))
-    new GraftLakeTable(resolved,
-      Some(LakeMutationCtx(catalogRoot, ident.name, ver, metaRoot, snap)))
+        s"(have ${rows.map(_.version).sorted.mkString(",")})")
+    tableAt(hit.maxBy(_.version)).getOrElse(
+      throw new NoSuchTableException(ident)) // tombstoned
+  }
+
+  /** The mutable table one pointer-log row serves (None for a tombstone). */
+  private def tableAt(r: CatalogLogRow): Option[Table] =
+    Option.when(r.metaRoot.nonEmpty) {
+      val resolved = LakeResolver.resolve(Map("metaRoot" -> r.metaRoot, "snapshot" -> r.snapId.toString))
+      new GraftLakeTable(resolved, Some(LakeMutationCtx(
+        catalogRoot, r.table, r.version, r.metaRoot, r.snapId)))
+    }
+
+  /** CAS-advance `name` from `prior` to (metaRoot, snapId) and serve the
+    * new version — no second pointer-log read.
+    */
+  private def commitAndLoad(name: String, prior: Long, metaRoot: String,
+      snapId: Long): Table = {
+    val v = LakeCatalogLog.commit(logDir, name, expectedVersion = prior,
+      metaRoot = metaRoot, snapId = snapId)
+    tableAt(CatalogLogRow(v, name, metaRoot, snapId)).get
   }
 
   /** CREATE TABLE / CTAS (VERDICT r16 #4): bootstrap a fresh metadata
@@ -1286,10 +1067,8 @@ class GraftLakeCatalog
       columns: Array[org.apache.spark.sql.connector.catalog.Column],
       partitions: Array[Transform],
       properties: JMap[String, String]): Table = {
-    val s = SparkSession.active
-    import s.implicits._
-    val prior = latest(s, ident.name)
-    if (prior.exists(_._2.nonEmpty))
+    val prior = tips().get(ident.name)
+    if (prior.exists(_.metaRoot.nonEmpty))
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(ident)
     val partCols: Seq[String] = partitions.toSeq.map {
@@ -1308,21 +1087,15 @@ class GraftLakeCatalog
           s"dir layout), got ${f.dataType.simpleString}")
     }
     val root = graft.Fixtures.tempDir("graft_lakecreate")
-    fields.zipWithIndex.toSeq
-      .map { case (f, i) => (f.name, f.dataType.sql, partCols.contains(f.name), i.toLong) }
-      .toDF("name", "dtype", "is_part", "ord")
-      .coalesce(1).write.parquet(root.resolve("tableschema").toString)
-    Seq.empty[(Long, String, String, String, Long, String)]
-      .toDF("snap_id", "content", "file", "base", "seq", "key_col")
-      .coalesce(1).write.parquet(root.resolve("manifests").toString)
-    Seq((0L, "create", -1L)).toDF("snap_id", "op", "parent_id")
-      .coalesce(1).write.parquet(root.resolve("snapshots").toString)
-    graft.operators.PipelineOps.catalogCommit(
-      s, s"$catalogRoot/catalog_log", ident.name,
-      // CAS from the tombstone version when re-creating a dropped name
-      expectedVersion = prior.map(_._1).getOrElse(-1L),
-      metaRoot = root.toString, snapId = 0L)
-    load(ident, None)
+    LakeMeta.write(root.resolve("tableschema"), LakeMeta.TableSchemaSchema,
+      fields.zipWithIndex.toSeq.map { case (f, i) =>
+        (f.name, f.dataType.sql, partCols.contains(f.name), i.toLong) })
+    LakeMeta.write(root.resolve("manifests"), LakeMeta.ManifestSchema, Seq.empty)
+    LakeMeta.write(root.resolve("snapshots"), LakeMeta.SnapshotSchema,
+      Seq((0L, "create", -1L)))
+    // CAS from the tombstone version when re-creating a dropped name
+    commitAndLoad(ident.name, prior.map(_.version).getOrElse(-1L),
+      root.toString, 0L)
   }
   /** ALTER TABLE … ADD COLUMNS — schema evolution as a METADATA-ONLY
     * pointer advance (the Iceberg model: new table metadata, same
@@ -1337,18 +1110,10 @@ class GraftLakeCatalog
     * of scope here.
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    val s = SparkSession.active
-    import s.implicits._
-    val (ver, metaRoot, snap) = latest(s, ident.name)
-      .filter(_._2.nonEmpty)
-      .getOrElse(throw new NoSuchTableException(ident))
-    val tsDir = s"$metaRoot/tableschema"
-    require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(tsDir)),
+    val tip = live(ident.name).getOrElse(throw new NoSuchTableException(ident))
+    val cur = LakeFilters.declaredSchema(tip.metaRoot).getOrElse(sys.error(
       s"graft-lake: ALTER needs a declared-schema table (CREATE TABLE / " +
-        s"CTAS worlds); ${ident.name} predates the tableschema layout")
-    val cur = s.read.parquet(tsDir)
-      .select($"name", $"dtype", $"is_part", $"ord")
-      .as[(String, String, Boolean, Long)].collect().sortBy(_._4)
+        s"CTAS worlds); ${ident.name} predates the tableschema layout"))
     val supported: Set[DataType] = Set(LongType, IntegerType, StringType,
       DateType, DoubleType, FloatType, BooleanType)
     val adds = changes.map {
@@ -1368,27 +1133,19 @@ class GraftLakeCatalog
           s"graft-lake: column $n already exists")
         require(supported.contains(a.dataType),
           s"graft-lake: unsupported column type ${a.dataType.simpleString}")
-        (n, a.dataType.sql)
+        (n, a.dataType.sql, false)
       case c => throw new UnsupportedOperationException(
         s"graft-lake: only ADD COLUMNS is supported, got $c")
     }
     val newRoot = graft.Fixtures.tempDir("graft_lakealter")
     // no new snapshot: a zero-row manifest + the parent marker — every
     // existing snapshot's rows resolve through the chain
-    Seq.empty[(Long, String, String, String, Long, String)]
-      .toDF("snap_id", "content", "file", "base", "seq", "key_col")
-      .coalesce(1).write.parquet(newRoot.resolve("manifests").toString)
-    LakeFilters.writeParentMarker(newRoot, metaRoot)
-    s.read.parquet(s"$metaRoot/snapshots").coalesce(1)
-      .write.parquet(newRoot.resolve("snapshots").toString)
-    (cur.toSeq ++ adds.zipWithIndex.map { case ((n, t), i) =>
-      (n, t, false, cur.length.toLong + i) })
-      .toDF("name", "dtype", "is_part", "ord").coalesce(1)
-      .write.parquet(newRoot.resolve("tableschema").toString)
-    graft.operators.PipelineOps.catalogCommit(
-      s, s"$catalogRoot/catalog_log", ident.name,
-      expectedVersion = ver, metaRoot = newRoot.toString, snapId = snap)
-    load(ident, None)
+    LakeMeta.write(newRoot.resolve("manifests"), LakeMeta.ManifestSchema, Seq.empty)
+    LakeFilters.writeParentMarker(newRoot, tip.metaRoot)
+    LakeMeta.copyTable(s"${tip.metaRoot}/snapshots", newRoot.resolve("snapshots"))
+    LakeMeta.write(newRoot.resolve("tableschema"), LakeMeta.TableSchemaSchema,
+      (cur ++ adds).zipWithIndex.map { case ((n, t, p), i) => (n, t, p, i.toLong) })
+    commitAndLoad(ident.name, tip.version, newRoot.toString, tip.snapId)
   }
 
   /** DROP TABLE = one tombstone version in the pointer log (empty
@@ -1397,17 +1154,14 @@ class GraftLakeCatalog
     * tombstone). Also what Spark's non-atomic CTAS calls to clean up a
     * failed create-then-write.
     */
-  override def dropTable(ident: Identifier): Boolean = {
-    val s = SparkSession.active
-    latest(s, ident.name).filter(_._2.nonEmpty) match {
+  override def dropTable(ident: Identifier): Boolean =
+    live(ident.name) match {
       case None => false
-      case Some((ver, _, _)) =>
-        graft.operators.PipelineOps.catalogCommit(
-          s, s"$catalogRoot/catalog_log", ident.name,
-          expectedVersion = ver, metaRoot = "", snapId = -1L)
+      case Some(tip) =>
+        LakeCatalogLog.commit(logDir, ident.name,
+          expectedVersion = tip.version, metaRoot = "", snapId = -1L)
         true
     }
-  }
   override def renameTable(from: Identifier, to: Identifier): Unit =
     throw new UnsupportedOperationException("RENAME is out of scope")
 }

@@ -1,6 +1,5 @@
 package graft.sources.lake
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.types.StructType
@@ -27,11 +26,12 @@ private[lake] case class LakeOffset(snap: Long) extends Offset {
   * lineage steps one micro-batch may cover (default: all available).
   *
   * Scale shape: per trigger the driver reads the snapshots/manifests
-  * tables (linear in file COUNT, the same metadata every real table
-  * format reads to plan) and ships one InputPartition per ADDED file;
-  * executors read them through the same vectorized columnar path as the
-  * batch scan. A consumer tailing a 100 TB table pays |new files| per
-  * batch, never table size.
+  * tables directly ([[LakeMeta]] — KB-scale parquet, no Spark job;
+  * linear in file COUNT, the same metadata every real table format reads
+  * to plan) and ships one InputPartition per ADDED file; only those data
+  * files go through Spark, on the executors, through the same vectorized
+  * columnar path as the batch scan. A consumer tailing a 100 TB table
+  * pays |new files| per batch, never table size.
   */
 private[lake] class GraftLakeMicroBatchStream(
     metaRoot: String,
@@ -42,27 +42,16 @@ private[lake] class GraftLakeMicroBatchStream(
     maxSnapshotsPerTrigger: Int)
     extends MicroBatchStream with SupportsAdmissionControl {
 
-  private def spark = SparkSession.active
+  private def snapshots(): Seq[(Long, Long)] = // (snap_id, parent_id)
+    LakeMeta.read(s"$metaRoot/snapshots")
+      .map(r => (r.long("snap_id"), r.long("parent_id")))
 
-  private def snapshots(): Seq[(Long, Long)] = { // (snap_id, parent_id)
-    val s = spark
-    import s.implicits._
-    s.read.parquet(s"$metaRoot/snapshots")
-      .select($"snap_id", $"parent_id").as[(Long, Long)].collect().toIndexedSeq
-  }
-
-  private def head(): Long = {
-    val s = spark
-    import s.implicits._
-    ref match {
-      case Some(r) =>
-        val heads = s.read.parquet(s"$metaRoot/refs_log")
-          .filter($"ref" === r).select($"step", $"snap_id")
-          .as[(Long, Long)].collect()
-        require(heads.nonEmpty, s"graft-lake stream: unknown ref $r")
-        heads.maxBy(_._1)._2
-      case None => snapshots().map(_._1).max
-    }
+  private def head(): Long = ref match {
+    case Some(r) =>
+      val heads = LakeMeta.read(s"$metaRoot/refs_log").filter(_.str("ref") == r)
+      require(heads.nonEmpty, s"graft-lake stream: unknown ref $r")
+      heads.maxBy(_.long("step")).long("snap_id")
+    case None => snapshots().map(_._1).max
   }
 
   private def genesis(): Long = snapshots().map(_._1).min
@@ -104,25 +93,20 @@ private[lake] class GraftLakeMicroBatchStream(
 
   override def planInputPartitions(
       start: Offset, end: Offset): Array[InputPartition] = {
-    val s = spark
-    import s.implicits._
     val from = start.asInstanceOf[LakeOffset].snap
     val to = end.asInstanceOf[LakeOffset].snap
     val steps = lineage(from, to)
     if (steps.isEmpty) return Array.empty
-    val man = LakeFilters.normalizedManifests(s, metaRoot)
-      .filter($"snap_id".isin((from +: steps): _*))
-      .select($"snap_id", $"content", $"file", $"base")
-      .as[(Long, String, String, String)].collect()
+    val wanted = (from +: steps).toSet
+    val man = LakeFilters.normalizedManifests(metaRoot).collect {
+      case (id, e) if wanted(id) => (id, e.content, e.file, e.base) }
     def rel(f: String, b: String): String =
-      java.nio.file.Paths.get(LakeResolver.normLocal(b))
-        .relativize(java.nio.file.Paths.get(LakeResolver.normLocal(f)))
-        .toString
+      java.nio.file.Paths.get(b).relativize(java.nio.file.Paths.get(f)).toString
     val bySnap = man.groupBy(_._1)
     var prev = from
     val added = steps.flatMap { snap =>
-      val pm = bySnap.getOrElse(prev, Array.empty)
-      val cm = bySnap.getOrElse(snap, Array.empty)
+      val pm = bySnap.getOrElse(prev, Seq.empty)
+      val cm = bySnap.getOrElse(snap, Seq.empty)
       val prevData = pm.collect { case (_, "data", f, b) => rel(f, b) }.toSet
       val prevDel = pm.collect { case (_, c, f, b) if c != "data" => rel(f, b) }.toSet
       val removed = prevData --
@@ -135,8 +119,7 @@ private[lake] class GraftLakeMicroBatchStream(
           "files added) — the incremental append stream refuses; read the " +
           "changelog for row-level deltas")
       val out = cm.collect {
-        case (_, "data", f, b) if !prevData(rel(f, b)) =>
-          (LakeResolver.normLocal(b), LakeResolver.normLocal(f))
+        case (_, "data", f, b) if !prevData(rel(f, b)) => (b, f)
       }
       prev = snap
       out

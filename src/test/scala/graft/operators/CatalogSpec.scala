@@ -1,11 +1,15 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeCatalogLog
+
 /** Contracts of the catalog pointer layer ([[PipelineOps.catalogDir]] /
-  * [[PipelineOps.catalogCommit]]) the time-travel oracle cannot see: the
+  * [[LakeCatalogLog.commit]]) the time-travel oracle cannot see: the
   * compare-and-swap commit protocol, append-only history, and that the
   * current pointer resolves to the rollback world.
   */
@@ -45,13 +49,13 @@ class CatalogSpec extends AnyFunSuite {
         s"${PipelineOps.catalogDir(spark, sfDir)}/catalog_log")
       .coalesce(1).write.mode("overwrite").parquet(scratch)
     val ex = intercept[IllegalArgumentException] {
-      PipelineOps.catalogCommit(spark, scratch, "ship_fact",
+      LakeCatalogLog.commit(scratch, "ship_fact",
         expectedVersion = 0L, metaRoot = "/nowhere", snapId = 9L)
     }
     assert(ex.getMessage.contains("re-resolve"),
       "stale CAS should direct the loser to re-resolve")
     val before = spark.read.parquet(scratch).count()
-    val v = PipelineOps.catalogCommit(spark, scratch, "ship_fact",
+    val v = LakeCatalogLog.commit(scratch, "ship_fact",
       expectedVersion = 1L,
       metaRoot = PipelineOps.snapshotMetaDir(spark, sfDir), snapId = 4L)
     assert(v == 2L)
@@ -80,14 +84,14 @@ class CatalogSpec extends AnyFunSuite {
     // table's pointer moves
     val before = spark.read.parquet(scratch).count()
     intercept[IllegalArgumentException] {
-      PipelineOps.catalogCommitAll(spark, scratch, Seq(
+      LakeCatalogLog.commitAll(scratch, Seq(
         ("ship_fact", 1L, meta, 4L),
         ("rollup", 5L, meta, 4L))) // rollup doesn't exist: current is -1
     }
     assert(spark.read.parquet(scratch).count() == before,
       "a failed multi-table commit leaked rows")
     // a valid transaction advances BOTH tables in one appended file
-    val vs = PipelineOps.catalogCommitAll(spark, scratch, Seq(
+    val vs = LakeCatalogLog.commitAll(scratch, Seq(
       ("ship_fact", 1L, meta, 4L),
       ("rollup", -1L, meta, 0L)))
     assert(vs == Seq(2L, 0L))
@@ -111,7 +115,7 @@ class CatalogSpec extends AnyFunSuite {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val results = Await.result(Future.sequence((1 to 2).map(_ => Future {
-      try Right(PipelineOps.catalogCommit(spark, scratch, "ship_fact",
+      try Right(LakeCatalogLog.commit(scratch, "ship_fact",
         expectedVersion = 1L, metaRoot = meta, snapId = 4L))
       catch { case e: IllegalArgumentException => Left(e.getMessage) }
     })), 120.seconds).toList
@@ -160,7 +164,7 @@ class CatalogSpec extends AnyFunSuite {
           assert(attempts < 500, s"writer $w livelocked")
           val expect = currentVersion() // loser re-resolves, never blind
           try {
-            won += PipelineOps.catalogCommit(spark, scratch, "ship_fact",
+            won += LakeCatalogLog.commit(scratch, "ship_fact",
               expectedVersion = expect, metaRoot = meta, snapId = 4L)
             done += 1
           } catch {
@@ -187,6 +191,75 @@ class CatalogSpec extends AnyFunSuite {
     assert(logRows.forall(_._2 == 1L), "duplicate version row in the log")
   }
 
+  test("a concurrent reader sees each appended commit whole or not at " +
+      "all while CAS writers race") {
+    import spark.implicits._
+    val scratch = graft.Fixtures.tempDir("graft_cat_visible")
+      .resolve("catalog_log").toString
+    spark.read.parquet(
+        s"${PipelineOps.catalogDir(spark, sfDir)}/catalog_log")
+      .coalesce(1).write.mode("overwrite").parquet(scratch)
+    val meta = PipelineOps.snapshotMetaDir(spark, sfDir)
+    val writers = 4
+    val commitsEach = 3
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    @volatile var writing = true
+    // every read (direct, and every other one through Spark's lister)
+    // must parse whole files and see ship_fact's versions as a dense
+    // prefix that never shrinks: commits land one whole file at a time
+    val reader = Future {
+      var reads = 0
+      var lastMax = -1L
+      while (writing || reads < 2) {
+        val vs =
+          if (reads % 2 == 0) LakeCatalogLog.rows(scratch)
+            .filter(_.table == "ship_fact").map(_.version)
+          else spark.read.parquet(scratch)
+            .filter($"table_name" === "ship_fact")
+            .select($"version").as[Long].collect().toSeq
+        val sorted = vs.sorted
+        assert(sorted == (0L to sorted.last).toList,
+          s"read $reads saw non-dense versions $sorted")
+        assert(sorted.last >= lastMax, s"read $reads went back in time")
+        lastMax = sorted.last
+        reads += 1
+      }
+      reads
+    }
+    val landed = try Await.result(Future.sequence((0 until writers).map { w =>
+      Future {
+        val rnd = new scala.util.Random(2000L + w)
+        val won = scala.collection.mutable.ArrayBuffer[Long]()
+        var attempts = 0
+        while (won.size < commitsEach) {
+          attempts += 1
+          assert(attempts < 500, s"writer $w livelocked")
+          val expect = LakeCatalogLog.rows(scratch)
+            .filter(_.table == "ship_fact").map(_.version).max
+          try won += LakeCatalogLog.commit(scratch, "ship_fact",
+            expectedVersion = expect, metaRoot = meta, snapId = 4L)
+          catch {
+            case _: IllegalArgumentException =>
+              Thread.sleep(rnd.nextInt(20).toLong)
+          }
+        }
+        won.toList
+      }
+    }), 600.seconds).toList finally writing = false
+    assert(Await.result(reader, 600.seconds) >= 2)
+    val allWon = landed.flatten.sorted
+    assert(allWon == (2L to 1L + writers * commitsEach).toList,
+      s"won versions not dense/unique: $allWon")
+    val logVersions = LakeCatalogLog.rows(scratch)
+      .filter(_.table == "ship_fact").map(_.version).sorted
+    assert(logVersions == (0L to 1L + writers * commitsEach).toList)
+    // no in-flight temp file is left behind
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(scratch))
+      .iterator().asScala.forall(!_.getFileName.toString.endsWith(".tmp")))
+  }
+
   test("a brand-new table CASes from version -1") {
     import spark.implicits._
     val scratch = graft.Fixtures.tempDir("graft_cat_scratch2")
@@ -194,7 +267,7 @@ class CatalogSpec extends AnyFunSuite {
     spark.read.parquet(
         s"${PipelineOps.catalogDir(spark, sfDir)}/catalog_log")
       .coalesce(1).write.mode("overwrite").parquet(scratch)
-    val v = PipelineOps.catalogCommit(spark, scratch, "docs",
+    val v = LakeCatalogLog.commit(scratch, "docs",
       expectedVersion = -1L,
       metaRoot = PipelineOps.snapshotMetaDir(spark, sfDir), snapId = 0L)
     assert(v == 0L)

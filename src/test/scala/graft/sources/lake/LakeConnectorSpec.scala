@@ -296,4 +296,39 @@ class LakeConnectorSpec extends AnyFunSuite {
       s"expected the append-only refusal, got: ${chain(e).mkString(" | ")}")
     spark.catalog.dropTempView(sink)
   }
+
+  test("the direct reader resolves Spark-written fixture worlds: legacy " +
+      "manifests without base, DV bits arrays, INT32 columns") {
+    import spark.implicits._
+    // legacy layout: manifests (snap_id, file), base on the snapshots row
+    val meta = PipelineOps.snapshotMetaDir(spark, sfDir)
+    val viaSpark = spark.read.parquet(s"$meta/manifests")
+      .join(spark.read.parquet(s"$meta/snapshots").select("snap_id", "base"),
+        "snap_id")
+      .select("snap_id", "file", "base").as[(Long, String, String)].collect()
+      .map { case (id, f, b) => (id, "data", PipelineOps.normPath(f),
+        PipelineOps.normPath(b), 0L, "") }.toSet
+    val direct = LakeFilters.normalizedManifests(meta).map { case (id, e) =>
+      (id, e.content, e.file, e.base, e.seq, e.keyCol) }
+    assert(direct.nonEmpty && direct.toSet == viaSpark)
+
+    // deletion vectors: Spark's 3-level LIST of longs
+    val lake = LakeFixture.lakeMetaDir(spark, sfDir)
+    val dvFiles = LakeFilters.normalizedManifests(lake)
+      .collect { case (_, e) if e.content == "dv" => e.file }.distinct
+    assert(dvFiles.nonEmpty)
+    val dvDirect = LakeMeta.readFiles(dvFiles)
+      .map(r => r.str("file") -> r.longs("bits").toSeq).toMap
+    val dvSpark = spark.read.parquet(dvFiles: _*).select("file", "bits")
+      .as[(String, Seq[Long])].collect().toMap
+    assert(dvDirect.nonEmpty && dvDirect == dvSpark)
+
+    // INT32 columns widen to Long
+    val ints = graft.Fixtures.tempDir("graft_meta_ints").resolve("t").toString
+    Seq((1, "x"), (2, "y")).toDF("snap_id", "op").coalesce(1).write.parquet(ints)
+    assert(LakeMeta.read(ints).map(r => (r.long("snap_id"), r.str("op"))).toSet ==
+      Set((1L, "x"), (2L, "y")))
+    assert(LakeMeta.sparkSchema(LakeMeta.files(ints).head) ==
+      spark.read.parquet(ints).schema)
+  }
 }

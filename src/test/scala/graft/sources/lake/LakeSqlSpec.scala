@@ -44,6 +44,62 @@ class LakeSqlSpec extends AnyFunSuite {
     root.toString
   }
 
+  /** Spark jobs started while `body` runs. Listener events arrive in
+    * order, so a barrier job run after `body` (and one before it, to
+    * drain anything earlier) bounds exactly the body's jobs once the
+    * listener has seen the barrier start.
+    */
+  private def jobsOf(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("lakeSpec.barrier"))).getOrElse(""))
+    }
+    def barrier(tag: String): Int = {
+      sc.setLocalProperty("lakeSpec.barrier", tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("lakeSpec.barrier", null)
+      var n = 0
+      var t = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (t != tag) {
+        assert(t != null, s"listener never saw barrier $tag")
+        n += 1
+        t = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      n
+    }
+    sc.addSparkListener(l)
+    try {
+      barrier("open")
+      body
+      barrier("close")
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("a catalog statement runs Spark jobs only over data files: " +
+      "metadata is read and committed on the driver") {
+    import spark.implicits._
+    assert(jobsOf(spark.sql("CREATE TABLE graft_lake.jobs_t (l_orderkey " +
+      "BIGINT, v BIGINT, p STRING) PARTITIONED BY (p)")) == 0)
+    // the write job, plus the shuffle stage that clusters rows by
+    // partition (a job of its own under adaptive execution)
+    val insert = jobsOf(spark.sql("INSERT INTO graft_lake.jobs_t VALUES " +
+      "(1, 10, 'a'), (2, 20, 'b'), (3, 30, 'a')"))
+    assert(insert >= 1 && insert <= 2, s"INSERT ran $insert jobs")
+    var got: Seq[(Long, Long)] = Seq.empty
+    assert(jobsOf { got = spark.sql("SELECT l_orderkey, v FROM " +
+      "graft_lake.jobs_t WHERE p = 'a'").as[(Long, Long)].collect().toSeq } == 1)
+    assert(got.sorted == Seq((1L, 10L), (3L, 30L)))
+    // key-equality DELETE: an equality-delete file plus one commit
+    assert(jobsOf(spark.sql(
+      "DELETE FROM graft_lake.jobs_t WHERE l_orderkey = 1")) == 0)
+    assert(spark.sql("SELECT l_orderkey FROM graft_lake.jobs_t")
+      .as[Long].collect().sorted.toSeq == Seq(2L, 3L))
+  }
+
   test("SELECT through the catalog serves the current pointer (rollback)") {
     import spark.implicits._
     val viaSql = spark.sql(
@@ -374,16 +430,17 @@ class LakeSqlSpec extends AnyFunSuite {
       .select($"version", $"meta_root", $"snap_id")
       .as[(Long, String, Long)].head()
     val newRoot = graft.Fixtures.tempDir("graft_evo_splice")
-    val man = LakeFilters.normalizedManifests(spark, metaRoot)
-    val tip = man.filter($"snap_id" === snap)
+    val man = LakeFilters.normalizedManifests(metaRoot)
+    val tip = man.collect { case (id, e) if id == snap => e }
     val v1files = spark.read.parquet(v1root).inputFiles
       .map(PipelineOps.normPath).toSeq
     assert(v1files.size == 2)
-    import org.apache.spark.sql.functions.lit
-    man.unionByName(tip.withColumn("snap_id", lit(snap + 1)))
-      .unionByName(v1files.toDF("file").select(lit(snap + 1).as("snap_id"),
-        lit("data").as("content"), $"file", lit(v1root).as("base"),
-        lit(0L).as("seq"), lit("").as("key_col")))
+    // the splice root is written by Spark, so the direct metadata reader
+    // resolves a Spark-written commit here as well
+    (man.map { case (id, e) => (id, e.content, e.file, e.base, e.seq, e.keyCol) } ++
+      tip.map(e => (snap + 1, e.content, e.file, e.base, e.seq, e.keyCol)) ++
+      v1files.map(f => (snap + 1, "data", f, v1root, 0L, "")))
+      .toDF("snap_id", "content", "file", "base", "seq", "key_col")
       .coalesce(1)
       .write.parquet(newRoot.resolve("manifests").toString)
     spark.read.parquet(s"$metaRoot/snapshots")
@@ -392,8 +449,8 @@ class LakeSqlSpec extends AnyFunSuite {
         .toDF("snap_id", "op", "parent_id"))
       .coalesce(1)
       .write.parquet(newRoot.resolve("snapshots").toString)
-    LakeFilters.carryTableSchema(spark, metaRoot, newRoot)
-    PipelineOps.catalogCommit(spark, s"$catRoot/catalog_log", "evo_t",
+    LakeFilters.carryTableSchema(metaRoot, newRoot)
+    LakeCatalogLog.commit(s"$catRoot/catalog_log", "evo_t",
       expectedVersion = ver, metaRoot = newRoot.toString, snapId = snap + 1)
 
     // the MIXED snapshot serves: ints widened to bigint, floats to
@@ -522,8 +579,8 @@ class LakeSqlSpec extends AnyFunSuite {
       "a commit's own manifests must carry only its new snapshot's rows")
     // and the chain still serves every snapshot: the chained view holds
     // strictly more snapshots than the tip root alone
-    val chained = LakeFilters.normalizedManifests(spark, metaRoot)
-    assert(chained.select($"snap_id").distinct().count() >
+    val chained = LakeFilters.normalizedManifests(metaRoot)
+    assert(chained.map(_._1).distinct.size >
       own.select($"snap_id").distinct().count())
   }
 
